@@ -7,6 +7,7 @@
 #   make oracles         # just the oracle sweep
 #   make test            # just pytest
 #   make bench           # just the headline bench JSON line
+#   make perf            # perfbench's own tests + one untraced run per workload
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -18,7 +19,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench
+.PHONY: gate oracles test bench perf
 
 oracles:
 	@mkdir -p $(OUT)
@@ -34,6 +35,11 @@ bench:
 	@mkdir -p $(OUT)
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF) python bench.py 2>$(OUT)/bench.err | tee $(OUT)/bench.json
 	@python -c "import json; json.load(open('$(OUT)/bench.json'))"
+
+perf:
+	python -m pytest perfbench/tests -q
+	python3 perfbench/run.py --workload build --seed 1 --seconds 10 --trace 0
+	python3 perfbench/run.py --workload query --seed 1 --seconds 10 --trace 0
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

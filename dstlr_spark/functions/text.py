@@ -1,17 +1,14 @@
 """Scalar text functions (SURVEY.md §2.7 C1-C12).
 
 Every function here returns a Column built from pyspark.sql.functions —
-JVM-side, whole-stage-codegen'd, no Python in the hot path. The lone
-unavoidable Python step (UTF-8 byte truncation, C9) is an Arrow-batched
-pandas UDF.
+JVM-side, whole-stage-codegen'd, no Python in the hot path; the UTF-8
+byte cap (C9) included.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 #: POS-tag-punctuation class the reference drops from lemma keys
 #: (ExtractTriples.scala:192). We apply it to surface tokens.
@@ -147,28 +144,37 @@ def span_index_label(begin: Column | str, end: Column | str) -> Column:
     return F.concat_ws("-", b.cast("string"), e.cast("string"))
 
 
-@F.pandas_udf(T.StringType())
-def utf8_truncate_1024(s: pd.Series) -> pd.Series:
+def utf8_truncate_1024(col: Column | str) -> Column:
     """Cap a string at 1024 UTF-8 **bytes** (C9, LoadTriples.scala:16-17,55-59).
 
     The reference byte-slices and can split a multi-byte code point; we
-    decode with errors='ignore' so the result is always valid UTF-8 —
-    a documented, deliberate divergence (SURVEY.md C9).
+    cut at the last code-point boundary at or before byte 1024, so the
+    result is always valid UTF-8 and equals Python's
+    ``s.encode()[:1024].decode("utf-8", "ignore")`` — a documented,
+    deliberate divergence (SURVEY.md C9).
+
+    A pure Catalyst expression: strings of at most 1024 bytes pass
+    through; a longer one is encoded and cut before the code point that
+    straddles byte 1024. A code point is at most 4 bytes, so that
+    code point starts at the last lead (non-``10xxxxxx``) byte among
+    bytes 1022-1025, and checking bytes 1023-1025 finds it.
     """
-    return s.map(
-        lambda x: x
-        if x is None or len(x.encode("utf-8")) <= 1024
-        else x.encode("utf-8")[:1024].decode("utf-8", "ignore")
-    )
-
-
-def utf8_truncate_1024_gated(col: Column | str) -> Column:
-    """C9 with a JVM fast path: a string of ≤256 characters can never
-    exceed 1024 UTF-8 bytes (≤4 bytes per code point), so >99.99% of
-    spans skip the Arrow round-trip entirely and stay inside whole-stage
-    codegen; only rare long spans pay the pandas UDF."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(c) <= 256, c).otherwise(utf8_truncate_1024(c))
+    utf8 = F.encode(c, "UTF-8")
+
+    def lead(pos: int) -> Column:
+        # continuation bytes are 0x80-0xBF: first hex digit 8, 9, A or B
+        return ~F.hex(F.substring(utf8, pos, 1)).substr(1, 1).isin("8", "9", "A", "B")
+
+    keep = (
+        F.when(lead(1025), 1024)
+        .when(lead(1024), 1023)
+        .when(lead(1023), 1022)
+        .otherwise(1021)
+    )
+    return F.when(F.octet_length(c) <= 1024, c).otherwise(
+        F.decode(utf8.substr(F.lit(1), keep), "UTF-8")
+    )
 
 
 def max_sentence_tokens(contents: Column | str) -> Column:

@@ -33,6 +33,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dstlr_spark.sources.io import local_frame
+
 LEDGER_SCHEMA = (
     "bucket int, n_input_rows long, input_fingerprint long, n_triples long, "
     "wall_sec double, finished_ts timestamp"
@@ -45,7 +47,7 @@ def bucket_expr(key: str = "conv_id", n_buckets: int = 16):
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     if not Path(ledger_dir).exists():
-        return spark.createDataFrame([], LEDGER_SCHEMA)
+        return local_frame(spark, [], LEDGER_SCHEMA)
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
 
 
@@ -111,7 +113,7 @@ def invalidate_buckets(
     kept.write.mode("overwrite").parquet(tmp)
     rewritten = spark.read.schema(LEDGER_SCHEMA).parquet(tmp).collect()
     shutil.rmtree(ledger_dir, ignore_errors=True)
-    spark.createDataFrame(rewritten, LEDGER_SCHEMA).write.mode(
+    local_frame(spark, rewritten, LEDGER_SCHEMA).write.mode(
         "overwrite"
     ).parquet(ledger_dir)
     shutil.rmtree(tmp, ignore_errors=True)
@@ -220,7 +222,7 @@ def run_with_ledger(
             )
             for b in group
         ]
-        spark.createDataFrame(rows, LEDGER_SCHEMA).withColumn(
+        local_frame(spark, rows, LEDGER_SCHEMA).withColumn(
             "finished_ts", F.current_timestamp()
         ).write.mode("append").parquet(ledger_dir)
         processed += len(group)
@@ -234,7 +236,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     if not any(Path(out_dir).glob("bucket=*")):
         from dstlr_spark.schemas import TRIPLE_SCHEMA
 
-        return spark.createDataFrame([], TRIPLE_SCHEMA).withColumn(
+        return local_frame(spark, [], TRIPLE_SCHEMA).withColumn(
             "bucket", F.lit(None).cast("int")
         )
     return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/bucket=*")

@@ -24,9 +24,11 @@ from dstlr_spark.operators.extract import (
     mention_triples,
     relation_triples,
 )
-from dstlr_spark.functions.text import utf8_truncate_1024_gated
+from dstlr_spark.functions.text import utf8_truncate_1024
 from dstlr_spark.operators.graph import materialize_graph
 from dstlr_spark.operators.linking import resolve_aliases
+from dstlr_spark.plans.partitioning import num_partitions
+from dstlr_spark.sources.io import local_frame
 
 _NULL_META = (
     "struct<entity_class:string,span:string,begin:int,end:int,"
@@ -53,13 +55,14 @@ class NativeKG:
             n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # Spread the CPU-heavy annotator evenly (the reference's
         # repartition-before-extraction, ExtractTriples.scala:63): the
-        # Arrow scanner inherits input partitioning, and a parquet scan
-        # of few files would otherwise starve most cores. Conditional:
-        # callers that already fanned the corpus out (queries/doc_kg
-        # _documents) must not pay a second corpus exchange — the
-        # sentence-guard filter sits between the two Repartition nodes,
-        # so CollapseRepartition cannot merge them.
-        if documents._jdf.queryExecution().executedPlan().execute().getNumPartitions() < n_partitions:
+        # scan inherits input partitioning, and a parquet scan of few
+        # files would otherwise starve most cores. Conditional: callers
+        # that already fanned the corpus out (queries/doc_kg _documents)
+        # must not pay a second corpus exchange — the sentence-guard
+        # filter sits between the two Repartition nodes, so
+        # CollapseRepartition cannot merge them. The probe reads the
+        # planned exchange's count and runs no job.
+        if num_partitions(documents) < n_partitions:
             documents = documents.repartition(n_partitions)
         docs = apply_sentence_guard(documents, sent_threshold)
         self.mentions = extract_mentions_native(docs, gazetteer)
@@ -181,7 +184,7 @@ class NativeKG:
                 "mention_id",
                 F.col("attrs")["entity_class"].alias("entity_class"),
                 # C9 parity with materialize_graph (1024-byte span cap)
-                utf8_truncate_1024_gated(F.col("attrs")["span"]).alias("span"),
+                utf8_truncate_1024(F.col("attrs")["span"]).alias("span"),
                 F.col("attrs")["normalized"].alias("normalized"),
                 "index",
             )
@@ -212,8 +215,8 @@ class NativeKG:
                 ).dropDuplicates(["entity_id", "relation", "value"])
             )
         else:
-            fact_edges = links_to.sparkSession.createDataFrame(
-                [], "entity_id string, relation string, value string"
+            fact_edges = local_frame(
+                links_to.sparkSession, [], "entity_id string, relation string, value string"
             )
         entity_nodes = (
             links_to.select("entity_id")

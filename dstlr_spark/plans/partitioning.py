@@ -27,15 +27,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``, found without running a job.
+
+    Reads the planner's physical plan before execution preparation:
+    an exchange states its count, and a chain of narrow operators
+    above a leaf (a file scan, a local table, a checkpointed RDD)
+    inherits the leaf's, which building the leaf's RDD reports on the
+    driver. A shape whose count the exchanges added at preparation
+    decide (a join, an aggregate or a union below the first planned
+    exchange) reports the count that exchange will have: the one its
+    required distribution fixes, else ``spark.sql.shuffle.partitions``
+    (before AQE coalesces it).
+
+    ``executedPlan().execute()`` is not used: under AQE it runs every
+    shuffle stage below it to learn the final partitioning, and
+    ``df.rdd.getNumPartitions()`` does the same behind a Python RDD
+    conversion."""
+    node = df._jdf.queryExecution().sparkPlan()
+    shuffle_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    while True:
+        n = node.outputPartitioning().numPartitions()
+        if n > 0:
+            return n
+        children = node.children()
+        if children.isEmpty():
+            return node.execute().getNumPartitions()
+        if children.size() > 1:
+            return shuffle_partitions
+        required = node.requiredChildDistribution().head()
+        if required.toString() != "UnspecifiedDistribution":
+            fixed = required.requiredNumPartitions()
+            return fixed.get() if fixed.isDefined() else shuffle_partitions
+        node = children.head()
+
+
 def fan_out(df: DataFrame, multiple: int = 1) -> DataFrame:
     """Spread ``df`` across at least ``defaultParallelism * multiple``
     partitions, unless it already is."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiple
-    # JVM-side partition probe: df.rdd.getNumPartitions() round-trips
-    # the plan through the Python RDD conversion (~0.1-1 s per fresh
-    # DataFrame); the executedPlan probe is a few ms and runs no job
-    n = df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
-    if n >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism * multiple
+    if num_partitions(df) >= target:
         return df
     return df.repartition(target)

@@ -35,6 +35,7 @@ from dstlr_spark.plans.native_kg import NativeKG
 from dstlr_spark.queries.conv import _ENRICH_SQL
 from dstlr_spark.queries.sqlgen import values_cte
 from dstlr_spark.queries.streamgate import _SHRED_SQL
+from dstlr_spark.sources.io import local_frame
 from dstlr_spark.sources.transcripts import derive_transcripts
 
 COOCCUR_WINDOW = 8
@@ -100,8 +101,8 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstlr_spark.plans.partitioning import fan_out
 
     # fan_out: single-row-group input — annotator/shred map stages would
-    # otherwise run one-task; NativeKG's own repartition collapses with
-    # this one (CollapseRepartition), so the spread is never paid twice
+    # otherwise run one-task; NativeKG's partition probe sees this spread
+    # and adds no second one, so the spread is never paid twice
     return fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             F.col("doc_id").cast("string").alias("doc_id"),
@@ -111,19 +112,18 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gazetteer(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DOC_GAZETTEER, "term string, entity_class string")
+    return local_frame(spark, DOC_GAZETTEER, "term string, entity_class string")
 
 
 def _aliases(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        DOC_ALIASES, "alias string, entity_id string, prior double"
-    )
+    return local_frame(spark, DOC_ALIASES, "alias string, entity_id string, prior double")
 
 
 def _doc_fact_triples(spark: SparkSession) -> DataFrame:
     """DOC_FACTS → reference-shape ground-truth Fact triples."""
     rows = [("ground-truth", "Entity", e, r, "Fact", v) for e, r, v in DOC_FACTS]
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "doc string, subjectType string, subjectValue string, relation string, "
         "objectType string, objectValue string",
@@ -288,12 +288,8 @@ def q_enrich_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstlr_spark.operators.enrich import enrich_triples
 
     kg = _kg(spark, sf_dir)
-    facts = spark.createDataFrame(
-        ENRICH_FACTS, "entity_id string, property string, value string"
-    )
-    mapping = spark.createDataFrame(
-        PROPERTY_RELATION_DOC, "property string, relation string"
-    )
+    facts = local_frame(spark, ENRICH_FACTS, "entity_id string, property string, value string")
+    mapping = local_frame(spark, PROPERTY_RELATION_DOC, "property string, relation string")
     gt = enrich_triples(kg.links_triples(), facts, mapping)
     return gt.select(
         F.col("subjectValue").alias("entity_id"),
@@ -1807,9 +1803,7 @@ def q_entity_distances_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _comention_edges(spark, sf_dir)
         # already localCheckpoint'd by the staging layer — do not re-copy
     )
-    seeds = spark.createDataFrame(
-        [(a,) for a in DIST_BATCH_ANCHORS], "id string"
-    )
+    seeds = local_frame(spark, [(a,) for a in DIST_BATCH_ANCHORS], "id string")
     return entity_distances(edges, anchors=seeds)
 
 

@@ -349,10 +349,12 @@ def _l2_int(a, b):
     )
 
 
-def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
-    """pandas_udf mapping a quantized vector to its nearest centroid id
-    (exact integer squared-L2, ties to the smallest cid) over a
-    driver-collected, broadcast centroid matrix.
+def _with_nearest_centroid(df: DataFrame, cents: DataFrame, *keep: str) -> DataFrame:
+    """``(vec_id, cell, *keep)`` of ``df``: each quantized vector ``q``
+    mapped to its nearest centroid id (exact integer squared-L2, ties to
+    the smallest cid) by a pandas_udf over a driver-collected, broadcast
+    centroid matrix. An empty centroid set assigns nothing: the result
+    is empty, as the join this replaces returned.
 
     Replaces the former ``crossJoin(broadcast(cents))`` + higher-order
     ``aggregate(zip_with(...))`` + ``groupBy(vec_id).min_by`` shape:
@@ -373,6 +375,9 @@ def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
     import numpy as np
 
     rows = sorted(cents.select("cid", "cq").collect(), key=lambda r: r[0])
+    if not rows:
+        cell = F.lit(None).cast("long").alias("cell")
+        return df.select("vec_id", cell, *keep).where(F.lit(False))
     cids = np.array([r[0] for r in rows], dtype=np.int64)
     ct = np.array([r[1] for r in rows], dtype=np.float64).T.copy()  # (64, K)
     c2 = (ct * ct).sum(axis=0)  # (K,)
@@ -391,7 +396,7 @@ def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
         s += c2_r[None, :]
         return pd.Series(cids_r[np.argmin(s, axis=1)])
 
-    return cell_of
+    return df.select("vec_id", cell_of(F.col("q")).alias("cell"), *keep)
 
 
 def _assigned_cells(e: DataFrame) -> DataFrame:
@@ -402,8 +407,7 @@ def _assigned_cells(e: DataFrame) -> DataFrame:
     cents = e.where(F.col("vec_id") % IVF_STRIDE == 0).select(
         F.col("vec_id").alias("cid"), F.col("q").alias("cq")
     )
-    cell_of = _nearest_centroid_udf(e, cents)
-    return e.select("vec_id", cell_of(F.col("q")).alias("cell"), "q", "norm")
+    return _with_nearest_centroid(e, cents, "q", "norm")
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,12 +664,14 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     e = _emb(spark, sf_dir)
-    rows = e.select("vec_id", "q", "norm").collect()
-    if len(rows) > NEARDUP_EXACT_MAX_VECS:
+    # bound checked before anything reaches the driver: the limit stops
+    # the count one row past the cap
+    if e.limit(NEARDUP_EXACT_MAX_VECS + 1).count() > NEARDUP_EXACT_MAX_VECS:
         raise ValueError(
             f"exact near-dup mode is bounded at {NEARDUP_EXACT_MAX_VECS} "
             "vectors; use q_embedding_neardup_prod (LSH) at scale"
         )
+    rows = e.select("vec_id", "q", "norm").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     mat = np.array([r["q"] for r in rows], dtype=np.float64)
     sq = np.sqrt(np.array([r["norm"] for r in rows], dtype=np.float64))
@@ -824,11 +830,10 @@ KMEANS_ITERS = 2
 
 def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Map-side vectorized argmin over a broadcast centroid matrix
-    (:func:`_nearest_centroid_udf`); ties break on smallest centroid
+    (:func:`_with_nearest_centroid`); ties break on smallest centroid
     id. Zero shuffles — the former crossJoin + groupBy materialized
     N·K array-pair rows per Lloyd round."""
-    cell_of = _nearest_centroid_udf(e, cents)
-    return e.select("vec_id", cell_of(F.col("q")).alias("cell"), "q")
+    return _with_nearest_centroid(e, cents, "q")
 
 
 def _update_centroids(assigned: DataFrame) -> DataFrame:

@@ -18,8 +18,51 @@ from __future__ import annotations
 
 import os
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+
+#: Share of the host's physical memory the default driver heap takes. In
+#: local mode the driver IS the executor, but Python workers, the page
+#: cache and a tmpfs local dir need the rest.
+HEAP_FRACTION = 0.6
+#: Free tmpfs space below which ``spark.local.dir`` falls back to disk.
+SHM_MIN_FREE_BYTES = 4 << 30
+
+
+def host_defaults(meminfo: str, shm_stat: os.statvfs_result | None) -> dict[str, str]:
+    """Driver heap and local dir sized from the host, not hard-coded.
+
+    ``meminfo`` is the text of ``/proc/meminfo``; the heap is
+    :data:`HEAP_FRACTION` of its ``MemTotal`` (16g when the line is
+    missing). ``shm_stat`` is ``os.statvfs("/dev/shm")``, or ``None``
+    without one; tmpfs backs the local dir only when its free space
+    clears :data:`SHM_MIN_FREE_BYTES`, else the temp dir does.
+    ``SPARK_GRAFT_DRIVER_MEM`` / ``SPARK_GRAFT_LOCAL_DIR`` override
+    both in :func:`get_spark`."""
+    heap = "16g"
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kib = int(line.split()[1])
+            heap = f"{int(kib * HEAP_FRACTION) // 1024}m"
+    roomy = shm_stat is not None and shm_stat.f_bavail * shm_stat.f_frsize >= SHM_MIN_FREE_BYTES
+    return {
+        "spark.driver.memory": heap,
+        "spark.local.dir": "/dev/shm/dstlr_spark_local" if roomy else tempfile.gettempdir(),
+    }
+
+
+def _probe_host() -> dict[str, str]:
+    try:
+        meminfo = Path("/proc/meminfo").read_text()
+    except OSError:
+        meminfo = ""
+    try:
+        shm_stat = os.statvfs("/dev/shm")
+    except OSError:
+        shm_stat = None
+    return host_defaults(meminfo, shm_stat)
 
 
 def get_spark(
@@ -45,6 +88,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     n = os.cpu_count() or 8 if cpus == "*" else int(cpus)
     shuffle_partitions = shuffle_partitions or max(8, n)
+    host = _probe_host()
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -58,30 +102,28 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", host["spark.driver.memory"]),
+        )
         # Long sessions accumulate localCheckpoint blocks and broadcasts
         # whose cleanup waits on a driver GC (ContextCleaner is
         # reference-triggered); the default periodicGC.interval of 30min
         # never fires inside a bench/gate run, so storage fills and GC
         # stalls bleed into later queries (guide §5). Five minutes keeps
-        # the storage region bounded; the driver heap is sized for
-        # local[32] where the driver IS the executor.
+        # the storage region bounded.
         .config("spark.cleaner.periodicGC.interval", "5min")
         # Shuffle files and DISK_ONLY cache blocks live in
-        # spark.local.dir. The sandbox's /tmp is VM-backed ext4 measured
-        # at ~300 MB/s with high variance, while /dev/shm is tmpfs at
-        # ~2 GB/s; shuffle-heavy phases were measured swinging 7 s ->
-        # 47 s run-to-run on /tmp. On a real cluster this is the
-        # standard "local dirs on fast local disk/NVMe" deployment knob
-        # (guide §2.1) — override with SPARK_GRAFT_LOCAL_DIR.
+        # spark.local.dir. VM-backed ext4 was measured at ~300 MB/s with
+        # high variance, while /dev/shm is tmpfs at ~2 GB/s; shuffle-heavy
+        # phases were measured swinging 7 s -> 47 s run-to-run on disk.
+        # tmpfs is RAM, so it is used only when it has room to spare
+        # (host_defaults). On a real cluster this is the standard "local
+        # dirs on fast local disk/NVMe" deployment knob (guide §2.1) —
+        # override with SPARK_GRAFT_LOCAL_DIR.
         .config(
             "spark.local.dir",
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                "/dev/shm/dstlr_spark_local"
-                if os.path.isdir("/dev/shm")
-                else tempfile.gettempdir(),
-            ),
+            os.environ.get("SPARK_GRAFT_LOCAL_DIR", host["spark.local.dir"]),
         )
     )
     for k, v in (extra_conf or {}).items():
@@ -103,9 +145,7 @@ def ship_package(spark: SparkSession) -> None:
     """
     if getattr(spark, "_dstlr_pyfiles_added", False):
         return
-    import tempfile
     import zipfile
-    from pathlib import Path
 
     pkg = Path(__file__).resolve().parent
     if not pkg.is_dir():

@@ -26,6 +26,7 @@ from dstlr_spark.schemas import (
     FACTS_SCHEMA,
     PROPERTY_RELATION_SCHEMA,
 )
+from dstlr_spark.sources.io import local_frame
 
 # alias → (entity_id, prior). Ambiguous aliases (Apple, Paris) exercise
 # the arg-max link scorer; ties broken by entity_id for determinism.
@@ -80,12 +81,12 @@ FACTS_ROWS: list[tuple[str, str, str]] = [
 
 
 def alias_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ALIAS_ROWS, ALIAS_DICT_SCHEMA)
+    return local_frame(spark, ALIAS_ROWS, ALIAS_DICT_SCHEMA)
 
 
 def property_relation(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(PROPERTY_RELATION_ROWS, PROPERTY_RELATION_SCHEMA)
+    return local_frame(spark, PROPERTY_RELATION_ROWS, PROPERTY_RELATION_SCHEMA)
 
 
 def facts(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(FACTS_ROWS, FACTS_SCHEMA)
+    return local_frame(spark, FACTS_ROWS, FACTS_SCHEMA)

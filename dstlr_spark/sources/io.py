@@ -16,8 +16,12 @@ partition transform.
 
 from __future__ import annotations
 
+import datetime as dt
+from typing import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -36,6 +40,36 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     if "/" not in location and _iceberg_available(spark):
         return spark.read.format("iceberg").load(location)
     return spark.read.parquet(location)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small constant table (fixtures, gazetteers, ledger rows) as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``LogicalRDD``:
+    every read of it runs a job through a Python worker, and Catalyst
+    sizes it at ``defaultSizeInBytes``, so it can never auto-broadcast.
+    An Arrow table handed to ``createDataFrame`` becomes a
+    ``LocalTableScan`` instead: the rows live in the driver JVM, carry
+    their real size, and a read runs no Python. Schema (nullability
+    included) and values are those of the list path; a naive
+    ``datetime`` is read in the process's local time zone, as the list
+    path reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    arrays = []
+    for values, field in zip(columns, arrow):
+        if pa.types.is_timestamp(field.type):
+            values = [None if v is None else v.astimezone(dt.timezone.utc) for v in values]
+        arrays.append(pa.array(values, type=field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def write_table(

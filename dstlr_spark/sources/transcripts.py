@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dstlr_spark.schemas import TRANSCRIPT_SCHEMA
+from dstlr_spark.sources.io import local_frame
 
 # The reference's embedded smoke corpus, verbatim (ExtractTriples.scala:162),
 # plus two sentences exercising the non-DATE temporal classes the reference
@@ -110,7 +111,7 @@ def generate_transcripts(
     include_pathological: bool = True,
 ) -> DataFrame:
     rows = generate_transcript_rows(seed, n_convs, include_pathological)
-    return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    return local_frame(spark, rows, TRANSCRIPT_SCHEMA)
 
 
 def derive_transcripts(documents: DataFrame, turn_words: int = 8) -> DataFrame:

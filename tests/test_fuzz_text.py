@@ -55,25 +55,35 @@ def test_utf8_truncate_fuzz(spark):
             assert t == orig
 
 
-def test_utf8_truncate_gated_lockstep(spark):
-    """The gated (JVM fast-path) variant is value-identical to the pandas
-    UDF on short ASCII, boundary-length, and multibyte-long inputs."""
-    from dstlr_spark.functions.text import utf8_truncate_1024_gated
+def _utf8_cap_py(s):
+    return None if s is None else s.encode("utf-8")[:1024].decode("utf-8", "ignore")
 
-    cases = [
-        "short",
-        "a" * 256,            # gate boundary: stays JVM-side
-        "a" * 257,            # just past the gate, still ≤1024 bytes
-        "a" * 2000,           # long ASCII → truncated to 1024
-        "日" * 600,            # 1800 bytes of 3-byte chars → code-point-safe cut
-        "",
-        None,
+
+def test_utf8_truncate_exact_vs_python_reference(spark, tmp_path):
+    """The Catalyst byte cap equals ``s.encode()[:1024].decode(..., "ignore")``
+    on boundary lengths, on every multi-byte width straddling the cut at
+    each offset, on U+FFFD, on the empty string and on null. The strings
+    go through parquet so the expression runs in generated code, not in
+    the optimizer's constant folding."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cases = ["a" * 1023, "a" * 1024, "a" * 1025, "", None, "\ufffd" * 400]
+    for width_char in ("é", "日", "😀", "\ufffd"):
+        for start in range(1018, 1027):  # byte offset of the straddling char
+            cases.append("a" * start + width_char + "b" * 8)
+            cases.append("é" * (start // 2) + width_char * 3)
+    path = str(tmp_path / "cap.parquet")
+    pq.write_table(pa.table({"s": pa.array(cases, pa.string())}), path)
+    got = [
+        r["t"]
+        for r in spark.read.parquet(path).select(utf8_truncate_1024("s").alias("t")).collect()
     ]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    gated = [r["t"] for r in df.select(utf8_truncate_1024_gated("s").alias("t")).collect()]
-    plain = [r["t"] for r in df.select(utf8_truncate_1024("s").alias("t")).collect()]
-    assert gated == plain
-    assert gated[3] == "a" * 1024
+    want = [_utf8_cap_py(s) for s in cases]
+    mismatches = [(len(s or ""), g, w) for s, g, w in zip(cases, got, want) if g != w]
+    assert not mismatches, mismatches[:3]
+    assert got[1] == "a" * 1024 and got[2] == "a" * 1024 and got[3] == ""
+    assert got[4] is None
 
 
 def test_lemma_rules_three_way_lockstep(spark):

@@ -142,3 +142,35 @@ def test_write_table_routes_catalog_tables_through_writeTo(monkeypatch):
     assert calls == [
         ("writeTo", "analytics.triples"), ("using", "iceberg"), "append",
     ]
+
+
+def test_local_frame_matches_list_path_as_local_relation(spark):
+    """local_frame returns what spark.createDataFrame(<list>) returns —
+    schema with nullability, and values, timestamps included — but plans
+    a LocalTableScan instead of a Python-RDD scan."""
+    import datetime as dt
+
+    from dstlr_spark.plans.ledger import LEDGER_SCHEMA
+    from dstlr_spark.schemas import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA, TRIPLE_SCHEMA
+    from dstlr_spark.sources.fixtures import ALIAS_ROWS
+    from dstlr_spark.sources.io import local_frame
+    from dstlr_spark.sources.transcripts import generate_transcript_rows
+
+    ledger_rows = [
+        (0, 10, 123456789, 7, 0.5, dt.datetime(2024, 5, 6, 7, 8, 9, 123456)),
+        (1, None, None, 0, None, None),
+    ]
+    cases = [
+        (ALIAS_ROWS, ALIAS_DICT_SCHEMA),  # non-nullable fields
+        (ledger_rows, LEDGER_SCHEMA),  # DDL string, nulls, finished_ts
+        (generate_transcript_rows(7, 5), TRANSCRIPT_SCHEMA),  # ts, null conv_id/text
+        ([], LEDGER_SCHEMA),
+        ([], TRIPLE_SCHEMA),  # empty with a struct column
+    ]
+    for rows, schema in cases:
+        new = local_frame(spark, rows, schema)
+        old = spark.createDataFrame(rows, schema)
+        assert new.schema == old.schema
+        assert new.collect() == old.collect()
+        plan = new._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan

@@ -8,6 +8,8 @@ extraction stage.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -62,15 +64,59 @@ def test_fused_extraction_has_no_exchange(spark):
         _aliases(spark),
         sent_threshold=10_000,
     )
-    plan = _plan(spark, bag)
-    assert "hashpartitioning" not in plan and "rangepartitioning" not in plan
-    assert plan.count("Exchange") <= plan.count("RoundRobinPartitioning") * 2
+    plan = _plan(spark, bag, "simple")
+    exchanges = [
+        re.sub(r"^[\s:+-]*", "", line) for line in plan.splitlines() if "Exchange" in line
+    ]
+    # exactly one plain round-robin Exchange node; no hash/range/single
+    # Exchange, no BroadcastExchange, no ReusedExchange
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("Exchange RoundRobinPartitioning("), exchanges
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
     # the annotator output itself is never exchanged: the Python stage
     # must appear above the (only) exchange in the operator tree
     python_pos = max(plan.find("MapInPandas"), plan.find("ArrowEvalPython"))
     first_exchange = plan.find("Exchange")
     assert first_exchange == -1 or python_pos < first_exchange
+
+
+def test_kg_supporting_plan_stays_in_the_jvm(spark):
+    """kg_supporting's plan, the cached mention stage included, has no
+    per-row Python (the C9 byte cap is a Catalyst expression) and reads
+    its constant tables (gazetteer, aliases, facts) as local relations,
+    not as Python-RDD scans."""
+    from dstlr_spark.queries.doc_kg import q_supporting
+
+    plan = _plan(spark, q_supporting(spark, "/root/testdata/sf0.001"), "simple")
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+
+
+def test_num_partitions_runs_no_job(spark):
+    """The partition probe behind fan_out and NativeKG reads the planned
+    physical plan: right counts for a scan, a round-robin spread, a
+    narrow chain over it and a local table, with zero Spark jobs."""
+    from dstlr_spark.plans.partitioning import num_partitions
+    from dstlr_spark.sources.io import local_frame
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spread = docs.repartition(6)
+    cases = {
+        "scan": (docs, 1),
+        "spread": (spread, 6),
+        "narrow": (spread.where(F.length("text") > 3).select("doc_id"), 6),
+        "local": (local_frame(spark, [("a",), ("b",)], "x string"), 2),
+        "aggregate": (docs.groupBy("doc_id").count(), 8),
+    }
+    sc.setJobGroup("num_partitions_probe", "probe")
+    try:
+        got = {name: num_partitions(df) for name, (df, _) in cases.items()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {name: want for name, (_, want) in cases.items()}
+    assert list(sc.statusTracker().getJobIdsForGroup("num_partitions_probe")) == []
 
 
 def test_aqe_enabled_on_aggregates(spark):

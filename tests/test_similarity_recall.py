@@ -48,6 +48,44 @@ def test_exact_mode_refuses_oversize_corpus(spark, monkeypatch):
         sim.q_embedding_neardup(spark, "/root/testdata/sf0.001")
 
 
+def test_exact_mode_checks_its_bound_before_collecting(spark, monkeypatch):
+    """The exact-mode guard protects the driver, so it must fire before
+    any row of the embedding table is collected to it."""
+    from pyspark.sql import DataFrame
+
+    import dstlr_spark.queries.similarity as sim
+
+    sim._emb(spark, "/root/testdata/sf0.001")  # staged before collect is trapped
+
+    def no_collect(self):
+        raise AssertionError("collected before the size guard fired")
+
+    monkeypatch.setattr(sim, "NEARDUP_EXACT_MAX_VECS", 10)
+    monkeypatch.setattr(DataFrame, "collect", no_collect)
+    with pytest.raises(ValueError, match="neardup_prod"):
+        sim.q_embedding_neardup(spark, "/root/testdata/sf0.001")
+
+
+def test_centroid_assignment_with_no_centroids_is_empty(spark):
+    """An empty centroid set assigns no vector: the result is empty with
+    the usual schema, where the GEMM kernel used to fail on a
+    zero-width centroid matrix."""
+    import pyspark.sql.functions as F
+
+    from dstlr_spark.queries.similarity import IVF_STRIDE, _assign_cells, _assigned_cells, _emb
+
+    e = _emb(spark, "/root/testdata/sf0.001")
+    no_cents = e.where(F.lit(False)).select(
+        F.col("vec_id").alias("cid"), F.col("q").alias("cq")
+    )
+    out = _assign_cells(e, no_cents)
+    assert out.columns == ["vec_id", "cell", "q"]
+    assert dict(out.dtypes)["cell"] == "bigint"
+    assert out.count() == 0
+    # no vec_id % IVF_STRIDE == 0 survives: the IVF assignment is empty too
+    assert _assigned_cells(e.where(F.col("vec_id") % IVF_STRIDE != 0)).count() == 0
+
+
 def test_exact_mode_matches_numpy_all_pairs(spark):
     """Block-GEMM kernel parity: the distributed exact mode must emit
     exactly the numpy all-pairs threshold set with identical ppm scores
