@@ -5,13 +5,17 @@
 #   make gate            # sf0.01 oracle sweep + pytest + bench (sf0.1)
 #   make gate SF=sf0.1   # oracle sweep at a different scale
 #   make oracles         # just the oracle sweep
+#   make oracles Q="kg_canonical_clusters dedup_neardup_clusters"  # named queries only
 #   make test            # just pytest
 #   make bench           # just the headline bench JSON line
 #   make perf            # perfbench's own tests + one untraced run per workload
 
 SF ?= sf0.01
+Q ?=
 BENCH_SF ?= /root/testdata/sf0.1
 OUT := gate_out
+# every scale's sf dir sits next to the bench one
+DATA := $(dir $(BENCH_SF))
 
 # pipefail so `cmd | tee log` fails when cmd fails — without it a
 # pytest collection error (exit 2, last line "N errors", no word
@@ -23,7 +27,7 @@ SHELL := /bin/bash
 
 oracles:
 	@mkdir -p $(OUT)
-	python scripts/check_oracles.py /root/testdata/$(SF) 2>&1 | tee $(OUT)/oracles_$(SF).log
+	python scripts/check_oracles.py $(DATA)$(SF) $(Q) 2>&1 | tee $(OUT)/oracles_$(SF).log
 	@grep -q "all oracle checks passed" $(OUT)/oracles_$(SF).log
 
 test:

@@ -21,6 +21,8 @@ span labels, sorted for determinism (A4).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -129,6 +131,18 @@ def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
     }
 
 
+def write_graph(graph: dict[str, DataFrame], out: str) -> dict[str, DataFrame]:
+    """Write each table to ``out/<name>`` (snapshot overwrite) and return
+    the tables read back. Checks and later steps then scan the written
+    files instead of re-deriving each table from the triple bag."""
+    for name, df in graph.items():
+        df.write.mode("overwrite").parquet(f"{out}/{name}")
+    return {
+        name: df.sparkSession.read.schema(df.schema).parquet(f"{out}/{name}")
+        for name, df in graph.items()
+    }
+
+
 def register_graph_views(spark, graph: dict[str, DataFrame], prefix: str = "") -> None:
     """Expose the graph tables as temp views so the Cypher-analog queries
     can also be written in plain ``spark.sql`` (dual API surface)."""
@@ -151,26 +165,23 @@ WHERE o.span = f.value
 
 
 def validate_fk(graph: dict[str, DataFrame]) -> dict[str, int]:
-    """J4: orphan-edge checks via left anti joins — the rebuild's analog of
-    Neo4j MATCH failing silently (LoadTriples.scala:199,210-211,221)."""
-    mention_ids = graph["mention_nodes"].select("mention_id")
-    orphans = {
-        "links_to_orphans": graph["links_to"]
-        .join(mention_ids, "mention_id", "left_anti")
-        .count(),
-        "relation_subject_orphans": graph["relation_edges"]
-        .join(
-            mention_ids.withColumnRenamed("mention_id", "subject_mention_id"),
-            "subject_mention_id",
-            "left_anti",
-        )
-        .count(),
-        "relation_object_orphans": graph["relation_edges"]
-        .join(
-            mention_ids.withColumnRenamed("mention_id", "object_mention_id"),
-            "object_mention_id",
-            "left_anti",
-        )
-        .count(),
+    """J4: orphan-edge checks via a left anti join — the rebuild's analog of
+    Neo4j MATCH failing silently (LoadTriples.scala:199,210-211,221).
+    The three edge endpoints are checked in one join and one aggregate."""
+    ends = [
+        ("links_to_orphans", graph["links_to"], "mention_id"),
+        ("relation_subject_orphans", graph["relation_edges"], "subject_mention_id"),
+        ("relation_object_orphans", graph["relation_edges"], "object_mention_id"),
+    ]
+    refs = functools.reduce(DataFrame.unionByName, [
+        df.select(F.lit(check).alias("check"), F.col(col).alias("mention_id"))
+        for check, df, col in ends
+    ])
+    found = {
+        r["check"]: r["n"]
+        for r in refs.join(graph["mention_nodes"].select("mention_id"), "mention_id", "left_anti")
+        .groupBy("check")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     }
-    return orphans
+    return {check: found.get(check, 0) for check, _, _ in ends}

@@ -201,8 +201,7 @@ def run_with_ledger(
         has_partitions = any(Path(out_dir).glob("bucket=*"))
         written = {
             r["bucket"]: r["n"]
-            for r in spark.read.option("basePath", out_dir)
-            .parquet(f"{out_dir}/bucket=*")
+            for r in spark.read.parquet(out_dir)
             .where(F.col("bucket").isin(group))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -239,4 +238,6 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
         return local_frame(spark, [], TRIPLE_SCHEMA).withColumn(
             "bucket", F.lit(None).cast("int")
         )
-    return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/bucket=*")
+    # partition discovery over out_dir itself: a glob path makes Spark
+    # probe for a streaming-sink log and log a FileNotFoundException
+    return spark.read.parquet(out_dir)

@@ -21,7 +21,7 @@ from dstlr_spark.operators.assembly import assemble_documents, salted_repartitio
 from dstlr_spark.operators.canonicalize import canonicalize_mentions
 from dstlr_spark.operators.enrich import enrich_triples
 from dstlr_spark.operators.extract import extract_triples_pattern
-from dstlr_spark.operators.graph import materialize_graph, validate_fk
+from dstlr_spark.operators.graph import materialize_graph, validate_fk, write_graph
 from dstlr_spark.plans.ledger import read_output, run_with_ledger
 from dstlr_spark.schemas import PROPERTY_RELATION_SCHEMA
 from dstlr_spark.session import get_spark
@@ -64,8 +64,9 @@ def main() -> None:
     )
     print(f"extract: {stats}")
 
-    bag = read_output(spark, f"{args.output}/triples").drop("bucket")
+    extracted = read_output(spark, f"{args.output}/triples").drop("bucket")
 
+    bag = extracted
     if args.facts and args.mapping:
         facts = read_table(spark, args.facts)
         mapping = spark.read.csv(
@@ -73,20 +74,19 @@ def main() -> None:
         )
         bag = bag.unionByName(enrich_triples(bag, facts, mapping))
 
-    graph = materialize_graph(bag)
-    for name, df in graph.items():
-        df.write.mode("overwrite").parquet(f"{args.output}/graph/{name}")
+    # the check and canonicalize scan the written tables, not the bag
+    graph = write_graph(materialize_graph(bag), f"{args.output}/graph")
     print(f"fk orphans: {validate_fk(graph)}")
 
     # cross-document canonical ids (north rule) — additive table
     from dstlr_spark.functions.text import lemma_key
 
-    mentions = bag.where(F.col("relation") == "MENTIONS").select(
+    # enrichment adds only Fact triples, so the mentions are all extracted
+    mentions = extracted.where(F.col("relation") == "MENTIONS").select(
         F.col("objectValue").alias("mention_id"),
         lemma_key(F.col("meta")["span"]).alias("key"),  # X4 identity key
     ).dropDuplicates(["mention_id"])
-    links = graph["links_to"]
-    canonicalize_mentions(mentions, links).write.mode("overwrite").parquet(
+    canonicalize_mentions(mentions, graph["links_to"]).write.mode("overwrite").parquet(
         f"{args.output}/graph/canonical_ids"
     )
     print("build_kg done")

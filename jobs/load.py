@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import argparse
 
-from dstlr_spark.operators.graph import materialize_graph, validate_fk
+from dstlr_spark.operators.graph import materialize_graph, validate_fk, write_graph
 from dstlr_spark.session import get_spark
 from dstlr_spark.sources.io import read_table
 
@@ -29,9 +29,7 @@ def main() -> None:
         bag = bag.drop("bucket")
     if args.ground_truth:
         bag = bag.unionByName(read_table(spark, args.ground_truth))
-    graph = materialize_graph(bag)
-    for name, df in graph.items():
-        df.write.mode("overwrite").parquet(f"{args.output}/{name}")
+    graph = write_graph(materialize_graph(bag), args.output)
     orphans = validate_fk(graph)
     print(f"load done; fk orphans: {orphans}")
     spark.stop()

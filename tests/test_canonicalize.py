@@ -203,3 +203,62 @@ def test_cc_partitioning_invariance(spark):
             base = got
         else:
             assert got == base, f"labels differ at {nparts} partitions"
+
+
+def _shuffled_path(spark, n=100, seed=1):
+    """A path whose vertex ids are shuffled along it: the label minimum
+    must travel the path in hops, so rounds grow with its length."""
+    import random
+
+    ids = [f"v{i:03d}" for i in range(n)]
+    random.Random(seed).shuffle(ids)
+    return spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+
+
+def test_cc_long_shuffled_path_bounded_rounds(spark):
+    """A 100-vertex shuffled path needs about 60 rounds: max_iter=50 must
+    raise, max_iter=80 must give the union-find labels (one component,
+    labelled by its minimum id). Staged rounds keep each round's plan
+    sized by its real data, so neither call stalls in planning."""
+    import time
+
+    import pytest
+
+    path = _shuffled_path(spark)
+    t0 = time.perf_counter()
+    with pytest.raises(RuntimeError, match="did not converge in 50"):
+        connected_components(path, max_iter=50)
+    assert time.perf_counter() - t0 < 120
+    t0 = time.perf_counter()
+    got = _cc_map(connected_components(path, max_iter=80))
+    assert time.perf_counter() - t0 < 120
+    assert got == {f"v{i:03d}": "v000" for i in range(100)}
+
+
+def _node_names(plan) -> list[str]:
+    children = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(children.size()) for n in _node_names(children.apply(i))
+    ]
+
+
+def test_cc_convergence_count_has_no_join(spark, monkeypatch):
+    """Each round's staged frame carries the previous label, so the
+    convergence count is a filter over one parquet scan, no join."""
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c")], "src string, dst string"
+    )
+    cls = type(edges)
+    count = cls.count
+    plans = []
+
+    def spy(df):
+        plans.append(_node_names(df._jdf.queryExecution().optimizedPlan()))
+        return count(df)
+
+    monkeypatch.setattr(cls, "count", spy)
+    got = _cc_map(connected_components(edges))
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
+    assert len(plans) >= 2  # one count per round, the last one finds 0
+    for nodes in plans:
+        assert nodes == ["Filter", "LogicalRelation"], nodes

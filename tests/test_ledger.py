@@ -173,3 +173,17 @@ def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
         read_output(spark, fresh_out)
     )
     assert stale_buckets(tr2, led, n_buckets=N_BUCKETS) == set()
+
+
+def test_read_output_matches_bucket_glob_read(spark, tmp_path):
+    """Partition discovery over the output dir reads the same schema and
+    rows as the explicit ``bucket=*`` glob it replaces."""
+    tr = generate_transcripts(spark, n_convs=12)
+    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    got = read_output(spark, out)
+    glob = spark.read.option("basePath", out).parquet(f"{out}/bucket=*")
+    assert got.schema == glob.schema
+    assert dict(got.dtypes)["bucket"] == "int"
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, glob.collect()))
+    assert got.count() > 0

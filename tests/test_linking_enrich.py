@@ -173,3 +173,34 @@ def test_inflected_alias_entries_resolve(spark):
 
     # fused in-annotator dictionary reduces through the same lemma key
     assert best_alias_entity(aliases) == {"system": "E-sys"}
+
+
+def test_validate_fk_on_written_graph_equals_lazy(spark, tmp_path):
+    """``write_graph`` returns the tables read back: the FK check over
+    them equals the check over the lazy frames, orphans included."""
+    from dstlr_spark.operators.graph import write_graph
+    from dstlr_spark.schemas import TRIPLE_SCHEMA
+
+    bag = _smoke_triples(spark)
+    orphans = spark.createDataFrame(
+        [
+            ("d-x", "Mention", "no-such-mention", "LINKS_TO", "Entity", "Q1", {}),
+            ("d-x", "Mention", "no-such-subject", "ORG_CITY_OF_HEADQUARTERS",
+             "Mention", "no-such-object", {}),
+        ],
+        TRIPLE_SCHEMA,
+    )
+    graph = materialize_graph(bag.unionByName(orphans))
+    written = write_graph(graph, str(tmp_path / "graph"))
+    assert set(written) == set(graph)
+    for name, df in graph.items():
+        assert sorted(map(str, written[name].collect())) == sorted(
+            map(str, df.collect())
+        ), name
+    lazy = validate_fk(graph)
+    assert validate_fk(written) == lazy
+    assert lazy == {
+        "links_to_orphans": 1,
+        "relation_subject_orphans": 1,
+        "relation_object_orphans": 1,
+    }
